@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.Tables
-import graft.util.{Checkpoints, Tokens}
+import graft.util.{Fixpoint, Tokens}
 
 /** Deduplication operators over the `documents` table — the dedup
   * toolbox a large-scale training-data pipeline needs (exact, MinHash
@@ -925,23 +925,6 @@ object Dedup {
                                              parts: Option[Int]): DataFrame =
     starContractRound(edges, parts)
 
-  /** Edges per star-phase shuffle partition (r15). The loop's two
-    * explicit repartitions are AQE-EXEMPT by design (exchange reuse
-    * needs the pinned count), so their width must be derived from the
-    * ROUND's edge count — which the fixpoint check already computes
-    * for free — not inherited from the session constant: a gate-scale
-    * graph (thousands of edges) otherwise pays numShufflePartitions
-    * empty tasks per phase per round, pure scheduling floor (measured
-    * ~1.0 s/round at sf0.1 on 2,658 edges), while a 100 TB edge set
-    * still fans out to the session width. 2M (a, b) pairs ≈ 100 MB of
-    * shuffle rows — guide §2.2's 100 MB–1 GB reduce-partition target. */
-  private val CcEdgesPerPartition = 2000000L
-
-  private def ccRoundParts(s: SparkSession, cnt: Long): Int =
-    math.max(1L, math.min(
-      s.sessionState.conf.numShufflePartitions.toLong,
-      (cnt + CcEdgesPerPartition - 1) / CcEdgesPerPartition)).toInt
-
   private[dedup] def starContractRound(edges: DataFrame,
                                        parts: Option[Int] = None)
       : DataFrame = {
@@ -997,21 +980,6 @@ object Dedup {
       }
   }
 
-  /** Run `f` with AQE disabled when `off` (restored in finally).
-    * Used by the CC loop ONLY for single-partition rounds, where AQE
-    * has nothing to coalesce or skew-split and each of the round's
-    * exchanges otherwise pays a separate query-stage re-optimization
-    * pause — at cluster scale rounds are multi-partition and keep
-    * AQE (including its skew-split of the join-back). */
-  private def withAqeOff[T](s: SparkSession, off: Boolean)(f: => T): T =
-    if (!off) f
-    else {
-      val k = "spark.sql.adaptive.enabled"
-      val prev = s.conf.get(k)
-      s.conf.set(k, "false")
-      try f finally s.conf.set(k, prev)
-    }
-
   /** Connected components over an undirected edge list (`a`, `b`
     * columns, any orientation) via alternating LARGE-STAR/SMALL-STAR
     * contraction (Kiveris et al., "Connected Components in MapReduce
@@ -1044,58 +1012,35 @@ object Dedup {
         greatest(col("a"), col("b")).as("b"))
       .where(col("a") =!= col("b"))
       .distinct()
-    // checkpoint (eager), NOT persist: each round's plan would
-    // otherwise nest every prior round's and optimizer time on the
-    // chain grows super-linearly (measured 65 s of pure planning by
-    // round 3 of the old loop). Checkpointing roots a fresh plan per
-    // round. Checkpoints.root is the durability dial: set
-    // graft.checkpoint.dir and the loop survives executor loss via
-    // reliable checkpoint(); unset, it uses localCheckpoint blocks.
-    var edges = Checkpoints.root(canonical)
-    // one count per materialized round, THREADED through the loop
-    // (r15): the previous spelling re-counted the prior round inside
-    // the convergence test — a job per round that the cached count
-    // makes free — and the count now also sizes the next round's
-    // star-phase width (see [[ccRoundParts]]).
-    var cnt = edges.count()
-    var converged = false
-    var rounds = 0
-    while (!converged) {
-      val tRound = System.nanoTime()
-      rounds += 1
-      if (rounds > 60)
-        sys.error("connectedComponents: star contraction did not " +
-          "converge in 60 rounds — this exceeds log2 of any physical " +
-          "edge count and indicates a bug, not a big input")
-      val parts = ccRoundParts(edges.sparkSession, cnt)
-      // only the round MATERIALIZATION runs under the single-partition
-      // AQE guard; the confirming exceptAll stays under session AQE —
-      // probed both ways, the AQE-off except pays a session-width
-      // un-coalesced exchange and measured a 0.3-0.5 s LOSS per loop
-      val next = withAqeOff(edges.sparkSession, parts == 1) {
-        Checkpoints.root(starContractRound(edges, Some(parts)))
-      }
-      val nextCnt = next.count()
-      // exact fixpoint test, count-first: counts over checkpointed
-      // RDDs are near-free and DIFFER on every non-final round (the
-      // edge set shrinks), so the shuffle-heavy except runs only on
-      // the confirming round. (A one-job symmetric-difference
-      // spelling pays a double anti-join every round — measured no
-      // better.) Equal counts + empty one-sided except ⟺ set equality
-      // for distinct sets.
-      converged = nextCnt == cnt && next.exceptAll(edges).isEmpty
-      val old = edges
-      edges = next
-      cnt = nextCnt
-      // Dataset.unpersist is a NO-OP for localCheckpoint blocks (they
-      // are RDD-level persisted, never registered with the
-      // CacheManager — review finding); free blocks AND any reliable
-      // checkpoint files of the superseded round via the bridge.
-      Checkpoints.free(old)
-      if (sys.env.contains("GRAFT_DEBUG"))
-        println(f"[cc] round=$rounds edges=$cnt parts=$parts " +
-          f"took=${(System.nanoTime() - tRound) / 1e9}%.2f s")
-    }
+    // each round is rooted (checkpoint, NOT persist: round N's plan
+    // would otherwise nest every prior round's, and optimizer time on
+    // the chain grows super-linearly — 65 s of pure planning by round
+    // 3 of the old loop) and counted in the same job. The count sizes
+    // the next round's star-phase width: the two explicit
+    // repartitions are AQE-exempt by design (exchange reuse needs the
+    // pinned count), so a gate-scale graph would otherwise pay
+    // numShufflePartitions empty tasks per phase per round (~1.0 s per
+    // round at sf0.1 on 2,658 edges). Only the round MATERIALIZATION
+    // runs under the single-partition AQE gate; the confirming
+    // exceptAll stays under session AQE — probed both ways, the
+    // AQE-off except pays a session-width un-coalesced exchange and
+    // measured a 0.3-0.5 s LOSS per loop.
+    val edges = Fixpoint.iterate("connectedComponents", canonical,
+      maxRounds = 60,
+      "connectedComponents: star contraction did not converge in 60 " +
+        "rounds — this exceeds log2 of any physical edge count and " +
+        "indicates a bug, not a big input",
+      aqeGate = true)(
+      r => starContractRound(r.df, Some(r.parts))) {
+      // exact fixpoint test, count-first: the counts DIFFER on every
+      // non-final round (the edge set shrinks), so the shuffle-heavy
+      // except runs only on the confirming round. (A one-job
+      // symmetric-difference spelling pays a double anti-join every
+      // round — measured no better.) Equal counts + empty one-sided
+      // except ⟺ set equality for distinct sets.
+      (prev, next) => next.rows == prev.rows &&
+        next.df.exceptAll(prev.df).isEmpty
+    }.df
     // star forest: every non-root appears exactly once as b, rooted at a
     edges.select(col("b").as("id"), col("a").as("label"))
       .union(edges.select(col("a").as("id"), col("a").as("label")).distinct())

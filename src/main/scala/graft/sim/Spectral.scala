@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.util.Fixpoint
 
 /** Spectral embedding analysis: exact fixed-point covariance and a
   * PCA top-component projection — the "what direction does this
@@ -538,12 +539,13 @@ object Spectral {
     * threshold ≤ k and none clears k+2: measured all-or-nothing at
     * sf0.01), while reciprocity varies per node (degrees 1..GraphK
     * here) and is the structure mutual-kNN clustering methods
-    * actually peel. The Spark loop peels UNTIL STABLE (the survivor
+    * actually peel. The Spark loop peels UNTIL STABLE (the live edge
     * set is monotone-shrinking, so an unchanged count IS the
     * fixpoint) and refuses loudly past [[CoreRounds]]; the oracle
-    * unrolls exactly [[CoreRounds]] rounds — legal because peel
-    * rounds past the fixpoint are no-ops, so both spellings meet at
-    * the true k-core. */
+    * unrolls exactly [[CoreRounds]] node-peel rounds — legal because
+    * peel rounds past the fixpoint are no-ops and the edge peel never
+    * needs more rounds than the node peel (see [[kCore]]), so both
+    * spellings meet at the true k-core. */
   val CoreK = 3
   val CoreRounds = 16
 
@@ -556,15 +558,32 @@ object Spectral {
     * the symmetrized union is the wrong graph here), so the graph
     * family shares one zone derivation.
     *
-    * Scale shape: each round is two src/dst semi-joins + one degree
-    * rollup, all key-partitioned on node id (the q180 iterate shape);
-    * the survivor relation only shrinks. CRITICAL iteration rule: the
-    * survivor set feeds TWO joins per round, so the lineage would
-    * recompute 2^rounds times if left lazy — each round's survivors
-    * (and the shared undirected relation) are materialized with an
-    * eager localCheckpoint, the single-app spelling of the
-    * ClusterMaint per-round zone write (the q208 UnionLoop lesson).
-    * Emits every node with its membership flag and in-core degree. */
+    * The loop peels EDGES, not nodes. Its state is the live mutual
+    * edge set E (both orientations of each edge); a round keeps the
+    * edges whose two endpoints both have live degree ≥ [[CoreK]] in E.
+    * Both degrees are key-partitioned window counts over the same
+    * rows — by `src`, then by `dst`; E stays symmetric, so a node's
+    * `dst` count is its degree (≤ GraphK, so each window's per-key
+    * gather is bounded). Why this is the node peel: write A_r for the
+    * node peel's survivors after round r (A_0 = every node, whose
+    * induced edge set is E_0, the mutual relation). By induction E_r
+    * is the edge set induced by A_r: round r + 1 keeps (u, v) iff u
+    * and v each have ≥ K neighbors inside A_r, i.e. iff both survive
+    * into A_(r+1). So E stops changing no later than A does, and the
+    * final E is the k-core's induced edge set. Every core node has
+    * ≥ K ≥ 1 live edges, so `in_core` = has a live edge and
+    * `deg_core` = its live edges counted by `src`. The maximal k-core
+    * is the same, so the node-peel oracle unroll still holds.
+    *
+    * Scale shape: a round shuffles the shrinking live edge set twice
+    * (src-keyed, then dst-keyed) — no node-set join, so no broadcast
+    * job per round, and no final degree pass: the degrees are the
+    * last round's edges. Each round is ONE eager job through
+    * [[graft.util.Fixpoint]] (counted by observation, rooted per the
+    * checkpoint dial, width sized from the live edge count, AQE off
+    * for single-partition rounds). At 100 TB the width derives the
+    * session cap and rounds keep AQE. Emits every node with its
+    * membership flag and in-core degree. */
   def kCore(s: SparkSession, dir: String): DataFrame = {
     val e = Similarity.knnGraphZone(s, dir)
     // mutual edges: one self-join on the reversed pair — symmetric by
@@ -573,52 +592,32 @@ object Spectral {
         col("a.query_id") === col("b.neighbor_id") &&
           col("a.neighbor_id") === col("b.query_id"), "left_semi")
       .select(col("query_id").as("src"), col("neighbor_id").as("dst"))
-      .localCheckpoint(true) // consumed 2× per round — derive ONCE
-    val nodes = corpus(s, dir).select(col("vec_id").as("id"))
-    // Scale-adaptive round width + single-partition AQE gate (r15 —
-    // the connectedComponents treatment applied to the peel loop):
-    // the mutual edge set is FIXED, so one count sizes every round's
-    // three exchanges; a gate-scale graph otherwise pays AQE's
-    // query-stage re-optimization pause per exchange per round on
-    // near-empty session-width shuffles. At 100 TB the edge count
-    // derives the session-width cap, rounds stay multi-partition and
-    // AQE stays on (including its semi-join skew split).
-    val parts = graft.util.Sessions.partsForRows(s, und.count())
-    def coreDeg(alive: DataFrame): DataFrame = und
-      .repartition(parts, col("src"))
-      .join(alive.select(col("id").as("src")), Seq("src"), "left_semi")
-      .repartition(parts, col("dst"))
-      .join(alive.select(col("id").as("dst")), Seq("dst"), "left_semi")
-      .repartition(parts, col("src"))
-      .groupBy(col("src")).agg(count(lit(1)).as("d"))
-    def aqeGate[T](f: => T): T = graft.util.Sessions.withAqeOff(
-      s, off = parts == 1)(f)
-    var alive = nodes.localCheckpoint(true)
-    var prev = alive.count()
-    var stable = false
-    var round = 0
-    while (!stable) {
-      round += 1
-      require(round <= CoreRounds,
-        s"k-core peel not stable after $CoreRounds rounds — raise " +
-          "CoreRounds (oracle unroll) to match")
-      alive = aqeGate {
-        coreDeg(alive).where(col("d") >= CoreK)
-          .select(col("src").as("id"))
-          .localCheckpoint(true) // truncate: read twice next round
-      }
-      val n = alive.count()
-      stable = n == prev // monotone-shrinking ⇒ equal count = fixpoint
-      prev = n
-    }
-    val finalDeg = coreDeg(alive)
-      .select(col("src").as("id"), col("d").as("deg_core"))
-    nodes.join(alive.withColumn("in_core", lit(true)), Seq("id"), "left")
-      .join(finalDeg, Seq("id"), "left")
+    val live = Fixpoint.iterate("kCore", und, CoreRounds,
+      s"k-core peel not stable after $CoreRounds rounds — raise " +
+        "CoreRounds (oracle unroll) to match", aqeGate = true)(
+      r => peelEdges(r.df, r.parts))(
+      // monotone-shrinking ⇒ an unchanged count is the fixpoint
+      (prev, next) => next.rows == prev.rows).df
+    val deg = live.groupBy(col("src").as("id"))
+      .agg(count(lit(1)).as("deg_core"))
+    corpus(s, dir).select(col("vec_id").as("id"))
+      .join(deg, Seq("id"), "left")
       .select(col("id").as("vec_id"),
-        coalesce(col("in_core"), lit(false)).as("in_core"),
+        col("deg_core").isNotNull.as("in_core"),
         coalesce(col("deg_core"), lit(0L)).as("deg_core"))
       .orderBy("vec_id")
+  }
+
+  /** One edge-peel round (see [[kCore]]): keep the symmetric edges
+    * whose endpoints both have degree ≥ [[CoreK]] among `live`. */
+  private def peelEdges(live: DataFrame, parts: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    live.repartition(parts, col("src"))
+      .withColumn("ds", count(lit(1)).over(Window.partitionBy(col("src"))))
+      .repartition(parts, col("dst"))
+      .withColumn("dd", count(lit(1)).over(Window.partitionBy(col("dst"))))
+      .where(col("ds") >= CoreK && col("dd") >= CoreK)
+      .select(col("src"), col("dst"))
   }
 
   /** The unrolled peel rounds as DuckDB CTEs — generated from the
@@ -664,7 +663,8 @@ object Spectral {
     * Scale shape: per round, one edge⋈label join + one (node, label)
     * count + one per-node argmax — all key-partitioned with k-bounded
     * fan-in (≤ 2k votes/node), never a corpus broadcast; round state
-    * is eagerly localCheckpoint-ed (the q232/q208 lineage rule).
+    * is eagerly rooted per round through [[graft.util.Fixpoint]] (the
+    * q232/q208 lineage rule).
     * Deterministic argmax = row_number over (count DESC, label ASC),
     * the shared cross-engine tie-break idiom. */
   def labelProp(s: SparkSession, dir: String): DataFrame = {
@@ -683,23 +683,27 @@ object Spectral {
   private[graft] def labelPropIterate(nodes: DataFrame,
                                       und: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    var labels = nodes.withColumn("lbl", col("id"))
-      .localCheckpoint(true)
-    for (_ <- 1 to LpRounds) {
-      val votes = und
-        .join(labels.select(col("id").as("dst"), col("lbl")), "dst")
-        .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("cnt"))
-      val win = Window.partitionBy(col("src"))
-        .orderBy(col("cnt").desc, col("lbl"))
-      val best = votes.withColumn("rn", row_number().over(win))
-        .where(col("rn") === 1)
-        .select(col("src").as("id"), col("lbl").as("nlbl"))
-      labels = labels.join(best, Seq("id"), "left")
-        .select(col("id"),
-          coalesce(col("nlbl"), col("lbl")).as("lbl"))
-        .localCheckpoint(true) // read twice next round + final sizes
-    }
-    labels
+    // each round's labels are read twice by the next round, so every
+    // round is rooted (through Fixpoint: checkpoint dial + free).
+    // No AQE gate: probed a loss here (4/4 pairs on a 4-core VM, cold
+    // pass ~2 s slower at sf0.01; the label zone is also written as
+    // session-width files)
+    Fixpoint.iterate("labelProp", nodes.withColumn("lbl", col("id")),
+      LpRounds, s"label propagation ran past its $LpRounds rounds")(
+      { r =>
+        val labels = r.df
+        val votes = und
+          .join(labels.select(col("id").as("dst"), col("lbl")), "dst")
+          .groupBy(col("src"), col("lbl")).agg(count(lit(1)).as("cnt"))
+        val win = Window.partitionBy(col("src"))
+          .orderBy(col("cnt").desc, col("lbl"))
+        val best = votes.withColumn("rn", row_number().over(win))
+          .where(col("rn") === 1)
+          .select(col("src").as("id"), col("lbl").as("nlbl"))
+        labels.join(best, Seq("id"), "left")
+          .select(col("id"),
+            coalesce(col("nlbl"), col("lbl")).as("lbl"))
+      })((_, next) => next.n == LpRounds).df
   }
 
   /** The symmetrized DISTINCT undirected edge relation of the q155

@@ -2,10 +2,10 @@ package graft.util
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 
-/** The durability dial for iterative loops (connected components, BPE
-  * training): each round must root a fresh plan — otherwise round N's
-  * plan nests every prior round's and optimizer time grows
-  * super-linearly — but HOW it roots is a deployment decision:
+/** The durability dial for iterative loops: each round must root a
+  * fresh plan — otherwise round N's plan nests every prior round's
+  * and optimizer time grows super-linearly — but HOW it roots is a
+  * deployment decision:
   *
   *  - `localCheckpoint()` (the default): executor-memory/disk blocks,
   *    fastest, but blocks die with their executor — on a preemptible
@@ -15,11 +15,18 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   *    store (HDFS/S3), survives executor loss.
   *
   * Set the session conf [[Checkpoints.DirKey]] (`graft.checkpoint.dir`)
-  * to a durable path to flip every loop to reliable mode — same loop
-  * code, no call-site changes. Superseded rounds are freed in either
-  * mode ([[org.apache.spark.sql.GraftBridge.freeCheckpoint]]): blocks
+  * to a durable path to flip the loops that root through here to
+  * reliable mode — same loop code, no call-site changes. Superseded
+  * rounds are freed in either mode
+  * ([[org.apache.spark.sql.GraftBridge.freeCheckpoint]]): blocks
   * unpersisted, reliable checkpoint files deleted once the next round
   * is materialized.
+  *
+  * Loops that honor the dial: connected components, the k-core peel
+  * and label propagation (all through [[Fixpoint]]), and BPE training.
+  * Loops that still call `localCheckpoint(true)` directly, and so stay
+  * executor-local whatever the dial says: BFS (`Spectral.bfsIterate`),
+  * HITS (`Postings.hitsHubs`) and TextRank (`Postings`).
   */
 object Checkpoints {
 

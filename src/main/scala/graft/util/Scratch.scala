@@ -3,6 +3,7 @@ package graft.util
 import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet scratch zone for shared intermediate relations: a relation
   * consumed by several plan branches (the shingle sets feeding a
@@ -39,6 +40,11 @@ object Scratch {
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private val memoized =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // the schema each parquet zone was written with, by path: a re-read
+  // passes it to spark.read.schema, so scanning a zone submits no
+  // schema-inference job (a memo hit then costs no Spark job at all)
+  private val schemas =
+    new java.util.concurrent.ConcurrentHashMap[String, StructType]()
 
   // ---- zone-build accounting (judge round-9 item #6) ----
   // Wall nanos spent MATERIALIZING zones (memo/memoZone misses and
@@ -74,13 +80,27 @@ object Scratch {
     * [[clear]] at a batch boundary, or rely on the default temp
     * root's exit cleanup. */
   def store(df: DataFrame, name: String): DataFrame = {
-    val spark = df.sparkSession
-    val path = s"${root(spark)}/${spark.sparkContext.applicationId}" +
-      s"/$name-${seq.incrementAndGet()}"
-    timedBuild { df.write.mode("overwrite").parquet(path) }
-    stored.add(path)
-    spark.read.parquet(path)
+    val path = newPath(df.sparkSession, name)
+    write(df, path)
+    read(df.sparkSession, path)
   }
+
+  /** A fresh `<root>/<appId>/<name>-<n>` zone path. */
+  private def newPath(spark: SparkSession, name: String): String =
+    s"${root(spark)}/${spark.sparkContext.applicationId}" +
+      s"/$name-${seq.incrementAndGet()}"
+
+  /** Write `df` as the parquet zone `path` and remember its schema. */
+  private def write(df: => DataFrame, path: String): Unit = timedBuild {
+    val d = df
+    d.write.mode("overwrite").parquet(path)
+    schemas.put(path, d.schema)
+    stored.add(path): Unit
+  }
+
+  /** Scan a zone with the schema it was written with. */
+  private def read(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemas.get(path)).parquet(path)
 
   /** [[store]] memoized per (key, application): the first call under a
     * given key derives and stores the relation; every later call —
@@ -98,7 +118,10 @@ object Scratch {
     * width, threshold) into `key`. An evolving input (a streaming zone,
     * a MergeOnRead table between epochs) must use [[store]]: memoizing
     * it would serve stale data. `df` is by-name — never built on a
-    * memo hit. */
+    * memo hit — and evaluated inside the zone-build timer, so eager
+    * work in the derivation counts as build time. A hit submits no
+    * Spark job: the zone is scanned with the schema it was written
+    * with. */
   def memo(spark: SparkSession, name: String, key: String)
           (df: => DataFrame): DataFrame = {
     val full = s"$key@${spark.sparkContext.applicationId}"
@@ -111,14 +134,12 @@ object Scratch {
     val path =
       if (existing != null) existing
       else {
-        val p = s"${root(spark)}/${spark.sparkContext.applicationId}" +
-          s"/$name-${seq.incrementAndGet()}"
-        timedBuild { df.write.mode("overwrite").parquet(p) }
-        stored.add(p)
+        val p = newPath(spark, name)
+        write(df, p)
         val prev = memoized.putIfAbsent(full, p)
         if (prev != null) prev else p
       }
-    spark.read.parquet(path)
+    read(spark, path)
   }
 
   /** Allocate a managed zone DIRECTORY for operators that write their
@@ -136,8 +157,7 @@ object Scratch {
     val existing = memoized.get(full)
     if (existing != null) existing
     else {
-      val p = s"${root(spark)}/${spark.sparkContext.applicationId}" +
-        s"/$name-${seq.incrementAndGet()}"
+      val p = newPath(spark, name)
       timedBuild { build(p) }
       stored.add(p)
       val prev = memoized.putIfAbsent(full, p)
@@ -155,6 +175,7 @@ object Scratch {
     }
     stored.clear()
     memoized.clear()
+    schemas.clear()
   }
 
   private def root(spark: SparkSession): String =

@@ -87,9 +87,9 @@ object Sessions {
   // CPU-heavy derivations comes from [[spreadScan]] instead.)
 
   /** Narrow (id-pair-class) rows per key-shuffle partition for an
-    * ITERATIVE round's explicit repartitions — the CC loop's sizing
-    * rule hoisted for the other fixpoint loops (r15): ≈2M pairs ≈
-    * 100 MB of shuffle rows, guide §2.2's reduce-partition target. */
+    * ITERATIVE round's explicit repartitions ([[Fixpoint]] sizes every
+    * round with it): ≈2M pairs ≈ 100 MB of shuffle rows, guide §2.2's
+    * reduce-partition target. */
   private val RowsPerRoundPartition = 2000000L
 
   /** Round width from a relation's row count: ⌈rows / 2M⌉ capped at
@@ -107,8 +107,8 @@ object Sessions {
     * where AQE has nothing to coalesce or skew-split and each of the
     * round's exchanges otherwise pays a separate query-stage
     * re-optimization pause. Multi-partition rounds (cluster scale)
-    * must keep AQE. Mirrors the CC loop's private gate (r14-judged
-    * REAL); probed a LOSS as a blanket session flip — only ever pass
+    * must keep AQE. [[Fixpoint]] applies it to the loops that opt in;
+    * probed a LOSS as a blanket session flip — only ever pass
     * `off = (parts == 1)`. */
   def withAqeOff[T](s: SparkSession, off: Boolean)(f: => T): T =
     if (!off) f

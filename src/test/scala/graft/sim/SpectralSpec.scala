@@ -153,6 +153,30 @@ class SpectralSpec extends SparkSpec {
     }
   }
 
+  test("q232: a warm call submits one job per peel round plus a fixed prelude") {
+    Spectral.kCore(spark, sf()).collect() // builds the kNN zone
+    // independent edge peel over the mutual edges: rounds until the
+    // live edge count repeats
+    val e = Similarity.knnGraphZone(spark, sf())
+      .select("query_id", "neighbor_id").collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    var live = e.filter { case (a, b) => e.contains((b, a)) }
+    var rounds = 0
+    var stable = false
+    while (!stable) {
+      rounds += 1
+      val deg = live.toSeq.groupBy(_._1).map { case (v, es) => v -> es.size }
+      val next = live.filter { case (a, b) =>
+        deg(a) >= Spectral.CoreK && deg(b) >= Spectral.CoreK }
+      stable = next.size == live.size
+      live = next
+    }
+    val (_, jobs) = jobsOf(Spectral.kCore(spark, sf()))
+    // prelude: the mutual-edge root under session AQE (broadcast +
+    // checkpoint) and the corpus scan's schema read
+    assert(jobs == rounds + 3, s"$jobs jobs for $rounds peel rounds")
+  }
+
   test("q268: two bridged cliques converge to two communities") {
     import spark.implicits._
     // triangle {1,2,3}, triangle {10,11,12}, one bridge 3–10

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
 import graft.dedup.Dedup
+import graft.sim.Spectral
 
 /** The durability dial: with `graft.checkpoint.dir` set, iterative
   * loops must root each round on RELIABLE checkpoints (files in the
@@ -15,12 +16,7 @@ import graft.dedup.Dedup
   * cluster), free superseded rounds' files, and produce the same
   * answers as local mode. */
 class CheckpointsSpec extends SparkSpec {
-
-  private def rddDirs(root: Path): Seq[Path] =
-    Files.walk(root).iterator().asScala
-      .filter(p => Files.isDirectory(p) &&
-        p.getFileName.toString.startsWith("rdd-"))
-      .toSeq
+  import CheckpointsSpec.rddDirs
 
   test("root() writes reliable checkpoint files when the dir is set") {
     val dir = Files.createTempDirectory("graft-ckpt")
@@ -83,4 +79,49 @@ class CheckpointsSpec extends SparkSpec {
         s"superseded rounds must be freed, found ${rddDirs(dir)}")
     } finally spark.conf.unset(Checkpoints.DirKey)
   }
+
+  /** Run `f` once in local mode and once under the reliable dial;
+    * return both answers and the rdd-* dirs left after the dial run. */
+  private def localVsReliable[T](f: => T): (T, T, Seq[Path]) = {
+    spark.conf.unset(Checkpoints.DirKey)
+    val local = f
+    val dir = Files.createTempDirectory("graft-ckpt-loop")
+    spark.conf.set(Checkpoints.DirKey, dir.toString)
+    try {
+      val reliable = f
+      (local, reliable, rddDirs(dir))
+    } finally spark.conf.unset(Checkpoints.DirKey)
+  }
+
+  test("k-core under the reliable dial: same core, only the live round's files") {
+    val (local, reliable, left) = localVsReliable(
+      Spectral.kCore(spark, sf()).collect().toSeq)
+    assert(reliable == local, "reliable mode must not change the core")
+    assert(left.size == 1,
+      s"the loop must checkpoint reliably and free superseded rounds: $left")
+  }
+
+  test("label propagation under the reliable dial: same labels, only the live round's files") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    val pairs = Seq.fill(120)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong))
+      .filter { case (a, b) => a != b }.distinct
+    val und = (pairs ++ pairs.map(_.swap)).distinct.toDF("src", "dst")
+    val nodes = (0L until 40L).toDF("id")
+    val (local, reliable, left) = localVsReliable(
+      Spectral.labelPropIterate(nodes, und).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(reliable == local, "reliable mode must not change the labels")
+    assert(left.size == 1,
+      s"the loop must checkpoint reliably and free superseded rounds: $left")
+  }
+}
+
+object CheckpointsSpec {
+  /** The reliable checkpoint dirs (one per checkpointed RDD) under root. */
+  def rddDirs(root: Path): Seq[Path] =
+    Files.walk(root).iterator().asScala
+      .filter(p => Files.isDirectory(p) &&
+        p.getFileName.toString.startsWith("rdd-"))
+      .toSeq
 }

@@ -49,6 +49,24 @@ class ScratchSpec extends SparkSpec {
       Seq((2L, "y")).toDF("id", "v"))
     assert(c.head().getLong(0) == 2L && builds == 1)
   }
+
+  test("memo hit: no Spark job, and the schema a plain read of the zone infers") {
+    import org.apache.spark.sql.functions._
+    val k = s"memo-jobs-${System.identityHashCode(this)}"
+    // non-nullable columns on the write side: the re-read must still
+    // report the nullable schema a parquet scan has
+    def derive() = spark.range(3).select(col("id"), lit("x").as("v"),
+      struct(col("id").as("n")).as("s"))
+    Scratch.memo(spark, "memo-jobs", k)(derive())
+    val (hit, jobs) = jobsOf(Scratch.memo(spark, "memo-jobs", k)(derive()))
+    assert(jobs == 0, s"a memo hit submitted $jobs Spark jobs")
+    val zone = new org.apache.hadoop.fs.Path(hit.inputFiles.head)
+      .getParent.toString
+    val plain = spark.read.parquet(zone)
+    assert(hit.schema == plain.schema)
+    assert(hit.schema.fields.forall(_.nullable))
+    assert(hit.collect().toSet == plain.collect().toSet)
+  }
 }
 // NOTE: Scratch.clear() is deliberately untested here — suites share
 // one JVM-wide session and run in parallel, and a global clear would
